@@ -15,6 +15,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .schemas import FIXTURE_TABLES
 
@@ -120,6 +121,15 @@ def load(
     ReadSchema at the scan are unchanged (pinned by
     tests/test_plan_shapes.py).
 
+    Only the first load of a table infers its schema (one Spark job
+    reading the footer); later loads pass the schema Spark inferred
+    then, so they launch no job. The fixtures' timestamp encoding
+    changes between rounds, so this cache, not a static StructType,
+    is what pins it. The cache key is ``(sf_dir, name, (mtime, size)
+    stamp, spark.sql.parquet.inferTimestampNTZ.enabled)``: a table
+    rewritten at the same path gets a new stamp, and the NTZ conf is
+    the one inference conf this function does not pin itself.
+
     ``rebalance=False`` opts a caller out (r15, the r14 verdict's
     ask #3): consumers whose scan-side work is trivial — a pure
     projection/union or a map-side-combining aggregate straight off
@@ -132,7 +142,15 @@ def load(
         raise KeyError(f"unknown fixture table {name!r}; have {FIXTURE_TABLES}")
     _ensure_conf(spark, "spark.sql.legacy.parquet.nanosAsLong", "true")
     _ensure_conf(spark, "spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(table_path(sf_dir, name))
+    path = table_path(sf_dir, name)
+    ntz = spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
+    key = (sf_dir, name, _table_stamp(sf_dir, name), ntz)
+    schema = _SCHEMA_CACHE.get(key)
+    if schema is None:
+        df = spark.read.parquet(path)
+        _SCHEMA_CACHE[key] = df.schema
+    else:
+        df = spark.read.schema(schema).parquet(path)
     df = normalize_ts_columns(df, _TS_COLS.get(name, ()))
     return _rebalance_scan(df, sf_dir, name) if rebalance else df
 
@@ -219,6 +237,10 @@ def _table_stamp(sf_dir: str, name: str) -> tuple[int, int]:
 
 
 _RG_CACHE: dict[tuple[str, str, tuple[int, int]], int] = {}
+
+
+# load()'s inferred-schema cache (see its docstring for the key)
+_SCHEMA_CACHE: dict[tuple[str, str, tuple[int, int], str], T.StructType] = {}
 
 
 def row_count(sf_dir: str, name: str) -> int:

@@ -8,6 +8,8 @@ math.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -66,6 +68,11 @@ def sq_dist_fixed(a: Column, b: Column, dim: int) -> Column:
     return acc
 
 
+def _check_dim(dim: int) -> None:
+    if dim < 1:
+        raise ValueError(f"vector dimension must be >= 1, got {dim}")
+
+
 def sql_dot(a: str, b: str, dim: int) -> str:
     """Straight-line left-associated dot product as a Spark-SQL
     FRAGMENT — the SQL twin of :func:`dot_fixed` (same accumulation
@@ -74,7 +81,9 @@ def sql_dot(a: str, b: str, dim: int) -> str:
     bit-for-bit because IEEE 0.0 + t == t). Parses in ONE py4j call
     where the Column form pays ~3*dim JVM round trips of pure plan
     construction (r15: that construction was up to 90% of the wall
-    time of the small similarity queries)."""
+    time of the small similarity queries). Raises ValueError on
+    ``dim < 1``, which would otherwise emit the unparseable ``()``."""
+    _check_dim(dim)
     return (
         "("
         + " + ".join(
@@ -88,7 +97,9 @@ def sql_dot(a: str, b: str, dim: int) -> str:
 def sql_sqdist(a: str, b: str, dim: int) -> str:
     """Straight-line left-associated squared distance as a Spark-SQL
     fragment — the SQL twin of :func:`sq_dist_fixed`; see
-    :func:`sql_dot` for the convention and why."""
+    :func:`sql_dot` for the convention and why. Raises ValueError on
+    ``dim < 1``."""
+    _check_dim(dim)
     return (
         "("
         + " + ".join(
@@ -109,7 +120,16 @@ def sql_plane_dot(v: str, plane: list[float]) -> str:
     line expansion: bits*dim expanded terms per bucket column blew the
     janino 64KB method limit, and a failed compile disables
     whole-stage codegen for the WHOLE stage (measured 9x slower on
-    ann_lsh_topk — the r15 negative result that pinned this form)."""
+    ann_lsh_topk — the r15 negative result that pinned this form).
+
+    Raises ValueError on a non-finite weight: ``inf``/``nan`` reprs
+    are not Spark double literals, so the fragment would fail to parse
+    far from the caller."""
+    bad = [x for x in plane if not math.isfinite(x)]
+    if bad:
+        raise ValueError(
+            f"sql_plane_dot: plane weights must be finite, got {bad[0]!r}"
+        )
     arr = "array(" + ", ".join(f"{x!r}D" for x in plane) + ")"
     return (
         f"aggregate(zip_with({v}, {arr}, (x, y) -> x * y), "
@@ -124,7 +144,10 @@ def sql_hyperplane_bucket(v: str, planes: list[list[float]]) -> str:
     interpreted HOF fold as the Column form (see :func:`sql_plane_dot`
     for why a straight-line expansion is NOT safe at bits x dim
     terms). Integer bit sum and the >= 0 sign test are exact, so
-    buckets are bit-identical to the Column form."""
+    buckets are bit-identical to the Column form. Raises ValueError on
+    an empty ``planes`` list, which would otherwise emit ``()``."""
+    if not planes:
+        raise ValueError("sql_hyperplane_bucket: planes must be non-empty")
     return (
         "("
         + " + ".join(

@@ -218,7 +218,11 @@ def ngram_jaccard_pairs(
     the SAME ngram/normalization contract (e.g. a checkpointed
     ``corpus_signatures`` projection) — callers running both dedup
     arms over one corpus pass it so the shingle pass is paid once;
-    ``docs`` is then ignored.
+    ``docs`` is then ignored. Precondition: every ``sg`` array is a
+    DISTINCT set (as ``shingles`` and ``corpus_signatures`` build it).
+    The verify step computes |A ∪ B| as |A| + |B| - |A ∩ B|, which
+    overcounts the union, and so understates the Jaccard, when an
+    array repeats an element; nothing checks this at run time.
     """
     if base is None:
         sg = shingles(F.col(text_col), ngram)
@@ -406,7 +410,10 @@ def minhash_near_dup_pairs(
     family (see :func:`base_hashes`): md5 for oracle portability,
     xxhash64 as the faster deployment path. Pass ``signatures`` (a
     precomputed :func:`corpus_signatures` frame) to skip the text
-    shingle+hash pass entirely; ``docs`` is then ignored.
+    shingle+hash pass entirely; ``docs`` is then ignored. Its ``sg``
+    arrays must be DISTINCT sets, as :func:`corpus_signatures` builds
+    them: the exact-Jaccard verify uses |A ∪ B| = |A| + |B| - |A ∩ B|,
+    which is wrong, silently, for arrays with repeated elements.
     """
     if signatures is not None:
         base, keyed = banded_from_signatures(

@@ -115,7 +115,18 @@ class SinapiPipeline:
         return os.path.join(self.warehouse, table)
 
     def read(self, table: str) -> DataFrame:
-        return self.spark.read.parquet(self.path(table))
+        """Lazy scan of one warehouse table under its declared schema.
+
+        ``SINAPI_SCHEMAS[table]`` is the contract ``bootstrap`` writes
+        and every load preserves, so the read pins it rather than
+        inferring it: an unpinned ``spark.read.parquet(dir)`` launches
+        one Spark job per call just to read a footer back. Columns
+        come back nullable, as with inference (tests/test_pipeline.py
+        checks the written footers still match the declaration).
+        """
+        return self.spark.read.schema(SINAPI_SCHEMAS[table]).parquet(
+            self.path(table)
+        )
 
     def bootstrap(self) -> None:
         """Fase 0: create-if-absent empty tables (no drop — see module

@@ -12,6 +12,16 @@ be: SINAPI's own discipline — numeric-coerce the id column and drop
 nulls (``processor.py:385-388``) — removes titles, headers, and
 legends in one filter. ``read_discovered_csv`` leaves every column as
 string; callers apply the coercion filter, which subsumes the skip.
+
+Width rule: the scan's schema is explicit, all-string, and as wide as
+the larger of the discovered header and the widest pre-scanned row;
+columns past the header are named ``COL_i``. Left to itself, Spark
+would take the width from the file's FIRST line, which silently
+truncates a sheet whose title line has fewer fields than its header
+(a bare ``TITLE`` line above a 6-column header loaded only
+``CODIGO``), and it would launch one job per sheet to count those
+fields. Rows wider than this schema that lie beyond the pre-scan are
+still truncated to it; failing fast on them is a separate change.
 """
 
 from __future__ import annotations
@@ -21,6 +31,7 @@ import io
 from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 from .normalize import (
     HEADER_SEARCH_LIMIT,
@@ -52,8 +63,10 @@ def read_discovered_csv(
     """Distributed scan of a junk-prefixed SINAPI CSV.
 
     Returns an all-string DataFrame with normalized, standardized,
-    deduplicated column names. Raises ValueError when the header is
-    not found within HEADER_SEARCH_LIMIT rows.
+    deduplicated column names, as wide as the module docstring's
+    width rule says; the read launches no Spark job. Raises
+    ValueError when the header is not found within
+    HEADER_SEARCH_LIMIT rows.
     """
     sample = _prescan(path, sep, HEADER_SEARCH_LIMIT + 2)
     hdr = find_header_row(sample, header_keywords)
@@ -73,8 +86,7 @@ def read_discovered_csv(
         standardize_id_names([normalize_name(n) for n in raw_names])
     )
 
-    df = spark.read.csv(path, sep=sep, header=False, inferSchema=False)
-    n_file_cols = len(df.columns)
-    if n_file_cols > len(names):
-        names = names + [f"COL_{i}" for i in range(len(names), n_file_cols)]
-    return df.toDF(*names[:n_file_cols])
+    width = max(len(names), *(len(r) for r in sample))
+    names = names + [f"COL_{i}" for i in range(len(names), width)]
+    schema = T.StructType([T.StructField(n, T.StringType()) for n in names])
+    return spark.read.schema(schema).csv(path, sep=sep, header=False)

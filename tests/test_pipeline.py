@@ -8,9 +8,13 @@ the same startrow-offset pattern as the reference's own processor test
 
 from __future__ import annotations
 
+import uuid
+
 import pytest
 
 from autosinapi_spark.pipeline import SinapiPipeline
+from autosinapi_spark.schemas import SINAPI_SCHEMAS
+from autosinapi_spark.sources.csv_source import read_discovered_csv
 
 PRECOS_CSV = """SINAPI - PREÇOS DE INSUMOS - JANEIRO/2024;;;;;
 Encargos: não desonerado;;;;;
@@ -47,15 +51,17 @@ INSUMO;9002;104;0,5;Prego 17x21;kg
 """
 
 
+def _write_csvs(d):
+    (d / "SINAPI_Precos_ISD.csv").write_text(PRECOS_CSV, encoding="utf-8")
+    (d / "SINAPI_Custos_CSD.csv").write_text(CUSTOS_CSV, encoding="utf-8")
+    (d / "SINAPI_Manutencoes.csv").write_text(MANUT_CSV, encoding="utf-8")
+    (d / "SINAPI_Analitico.csv").write_text(ESTRUTURA_CSV, encoding="utf-8")
+    return d
+
+
 @pytest.fixture()
 def csv_dir(tmp_path):
-    (tmp_path / "SINAPI_Precos_ISD.csv").write_text(PRECOS_CSV, encoding="utf-8")
-    (tmp_path / "SINAPI_Custos_CSD.csv").write_text(CUSTOS_CSV, encoding="utf-8")
-    (tmp_path / "SINAPI_Manutencoes.csv").write_text(MANUT_CSV, encoding="utf-8")
-    (tmp_path / "SINAPI_Analitico.csv").write_text(
-        ESTRUTURA_CSV, encoding="utf-8"
-    )
-    return tmp_path
+    return _write_csvs(tmp_path)
 
 
 def _run(spark, csv_dir, warehouse):
@@ -68,8 +74,40 @@ def _run(spark, csv_dir, warehouse):
     )
 
 
-def test_full_monthly_load(spark, csv_dir, tmp_path):
-    pipe, result = _run(spark, csv_dir, tmp_path / "wh")
+@pytest.fixture(scope="module")
+def monthly(spark, tmp_path_factory):
+    """One monthly load of the padded fixtures, shared read-only by the
+    tests that inspect its warehouse."""
+    root = tmp_path_factory.mktemp("monthly")
+    return _run(spark, _write_csvs(root), root / "wh")
+
+
+def _assert_footers_match_declared(spark, pipe):
+    """Each table's INFERRED schema equals its SINAPI_SCHEMAS entry in
+    names, order and types (nullability aside): the writers keep the
+    contract that ``SinapiPipeline.read`` pins."""
+    for t, declared in SINAPI_SCHEMAS.items():
+        footer = spark.read.parquet(pipe.path(t)).schema
+        assert [(f.name, f.dataType) for f in footer] == [
+            (f.name, f.dataType) for f in declared
+        ], t
+
+
+def _jobs_launched(spark, fn) -> int:
+    """Spark jobs ``fn()`` launches, counted under a fresh job group."""
+    sc = spark.sparkContext
+    group = f"job-count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job-count guard")
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_full_monthly_load(spark, monthly):
+    pipe, result = monthly
     assert result["status"] == "SUCESSO"
 
     insumos = {
@@ -143,6 +181,59 @@ def test_monthly_rerun_is_idempotent(spark, csv_dir, tmp_path):
     assert second["records_inserted"]["manutencoes_historico"] == 0
     assert pipe.read("insumos").count() == 4
     assert pipe.read("precos_insumos_mensal").count() == 7
+    _assert_footers_match_declared(spark, pipe)
+
+
+def test_warehouse_footers_match_declared_schemas(spark, monthly):
+    _assert_footers_match_declared(spark, monthly[0])
+
+
+def test_schema_pinned_reads_launch_no_jobs(spark, monthly, csv_dir):
+    """Reads whose schema the engine already knows run no Spark job:
+    warehouse reads, a repeated fixture load and the CSV source."""
+    from autosinapi_spark.catalog import load
+    from tests.conftest import SF_SMOKE
+
+    pipe = monthly[0]
+    # the counter sees the footer job an unpinned read launches
+    assert _jobs_launched(
+        spark, lambda: spark.read.parquet(pipe.path("insumos"))
+    ) >= 1
+    for t in SINAPI_SCHEMAS:
+        assert _jobs_launched(spark, lambda: pipe.read(t)) == 0, t
+    def load_lineitem():
+        return load(spark, SF_SMOKE, "lineitem")
+
+    load_lineitem()
+    assert _jobs_launched(spark, load_lineitem) == 0
+    sheet = str(csv_dir / "SINAPI_Precos_ISD.csv")
+    keywords = pipe.cfg.PRECOS_HEADER_KEYWORDS
+    assert _jobs_launched(
+        spark, lambda: read_discovered_csv(spark, sheet, keywords)
+    ) == 0
+
+
+def test_title_line_narrower_than_header_loads_every_column(
+    spark, monthly, csv_dir, tmp_path
+):
+    """A bare one-field title line (no ``;`` padding) above the header
+    must not narrow the sheet: the CSV read is as wide as the header,
+    and the load inserts what the padded sheet inserts. Rows wider
+    than the header that lie beyond the header pre-scan are still
+    truncated to the read's width; failing fast on them would be a
+    separate, declared change."""
+    sheet = csv_dir / "SINAPI_Precos_ISD.csv"
+    sheet.write_text(
+        "SINAPI - PREÇOS DE INSUMOS\n" + PRECOS_CSV.split("\n", 1)[1],
+        encoding="utf-8",
+    )
+    pipe, want = monthly
+    raw = read_discovered_csv(
+        spark, str(sheet), pipe.cfg.PRECOS_HEADER_KEYWORDS
+    )
+    assert raw.columns == ["CODIGO", "DESCRICAO", "UNIDADE", "SP", "RJ", "MG"]
+    _, got = _run(spark, csv_dir, tmp_path / "wh")
+    assert got["records_inserted"] == want["records_inserted"]
 
 
 def test_header_not_found_raises(spark, tmp_path):

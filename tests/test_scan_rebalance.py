@@ -90,6 +90,30 @@ def test_row_group_count_reads_footer(spark):
     ) in cat._RG_CACHE
 
 
+def test_schema_cache_sees_table_rewritten_at_same_path(spark, tmp_path):
+    """``load`` reuses its first inferred schema only while the table's
+    (mtime, size) stamp holds: a directory table rewritten in place
+    with one more column is re-inferred on the next load."""
+    import autosinapi_spark.catalog as cat
+
+    sf = str(tmp_path)
+    path = cat.table_path(sf, "region")
+    spark.createDataFrame(
+        [(0, "AFRICA")], "r_regionkey int, r_name string"
+    ).write.parquet(path)
+    assert load(spark, sf, "region").columns == ["r_regionkey", "r_name"]
+    assert any(k[:2] == (sf, "region") for k in cat._SCHEMA_CACHE)
+    assert load(spark, sf, "region").columns == ["r_regionkey", "r_name"]
+
+    spark.createDataFrame(
+        [(0, "AFRICA", "lost continent")],
+        "r_regionkey int, r_name string, r_comment string",
+    ).write.mode("overwrite").parquet(path)
+    df = load(spark, sf, "region")
+    assert df.columns == ["r_regionkey", "r_name", "r_comment"]
+    assert df.collect()[0]["r_comment"] == "lost continent"
+
+
 def test_rebalanced_scan_results_unchanged(spark, monkeypatch):
     with_reb = load(spark, SF_SMOKE, "lineitem").select(
         "l_orderkey", "l_linenumber"

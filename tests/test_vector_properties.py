@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -110,3 +111,36 @@ def test_sq_dist_fixed_bit_identical_to_hof_fold(spark, pairs):
             r.hof == r.fixed
             and math.copysign(1.0, r.hof) == math.copysign(1.0, r.fixed)
         )
+
+
+# Construction-time guards of the SQL-string generators: misuse raises
+# ValueError at the call, not an opaque parse error at execution.
+
+
+def test_sql_dot_rejects_empty_dim():
+    from autosinapi_spark.functions.vectors import sql_dot
+
+    with pytest.raises(ValueError, match="dimension"):
+        sql_dot("a", "b", 0)
+
+
+def test_sql_sqdist_rejects_empty_dim():
+    from autosinapi_spark.functions.vectors import sql_sqdist
+
+    with pytest.raises(ValueError, match="dimension"):
+        sql_sqdist("a", "b", 0)
+
+
+def test_sql_hyperplane_bucket_rejects_no_planes():
+    from autosinapi_spark.functions.vectors import sql_hyperplane_bucket
+
+    with pytest.raises(ValueError, match="non-empty"):
+        sql_hyperplane_bucket("v", [])
+
+
+@pytest.mark.parametrize("bad", [float("nan"), float("inf"), float("-inf")])
+def test_sql_plane_dot_rejects_non_finite_weight(bad):
+    from autosinapi_spark.functions.vectors import sql_plane_dot
+
+    with pytest.raises(ValueError, match="finite"):
+        sql_plane_dot("v", [1.0, bad, -1.0])

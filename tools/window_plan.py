@@ -61,18 +61,23 @@ def cohorts() -> tuple[list[str], list[str], list[str], list[str]]:
     last, latest = last_greens()
     bound = stale_bound(len(cur))
 
+    def age_key(n: str) -> tuple[int, str]:
+        return (last.get(n, -(10**9)), n)
+
     never = sorted(n for n in cur if n not in last)
+    # oldest green first, not by name: when an edit to a shared helper
+    # marks more than WINDOW rows changed, the changed rows that are
+    # ALSO overdue must lead the cohort so the truncated window still
+    # holds them
     changed = sorted(
-        n for n in cur if n in last and snap.get(n) != cur[n]
+        (n for n in cur if n in last and snap.get(n) != cur[n]),
+        key=age_key,
     )
     # rotation_check's rule: overdue at the NEXT driver check
     # (round latest+1) means last green <= latest - bound. Rows one
     # round younger (== latest+1-bound) become mandatory the round
     # AFTER — they are the preferred proactive fill.
     overdue_cut = latest - bound
-
-    def age_key(n: str) -> tuple[int, str]:
-        return (last.get(n, -(10**9)), n)
 
     rest = sorted(
         (n for n in cur if n not in never and n not in changed),
